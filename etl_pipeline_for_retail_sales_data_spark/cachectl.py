@@ -81,9 +81,13 @@ def shared_frame(df: DataFrame) -> DataFrame:
     regressions, plans/r12/ab_shared_frame.json). Reach for this ONLY
     when a recompute is real: (a) a construction-time PROBE is a
     separate execution and cannot share stages with the main collect
-    (the salted-ngram p99 path — A/B 1.5×), or (b) consumer branches
+    (the salted-ngram p99 path — A/B 1.5×), (b) consumer branches
     prune to different column sets and their exchanges cannot
-    canonicalize equal. Storage pool untouched (``getPersistentRDDs``
+    canonicalize equal, or (c) the caller runs SEVERAL SEPARATE ACTIONS
+    on the one returned frame (validate, then each sink — the retail
+    transform→load boundary, plans/retail.py): every action is its own
+    query execution, so no AQE stage reuse spans them and each would
+    rerun the whole lineage. Storage pool untouched (``getPersistentRDDs``
     stays empty — the cache-hygiene contract); files live in the
     checkpoint dir (HDFS/S3 on a cluster) and are reclaimed by the
     ContextCleaner when the frame is GC'd

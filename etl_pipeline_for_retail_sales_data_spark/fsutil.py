@@ -67,6 +67,21 @@ class HadoopFS:
             return []
         return [st.getPath().getName() for st in self._fs.listStatus(self._Path(p))]
 
+    def listing(self, p: str) -> tuple[tuple[str, int, int], ...] | None:
+        """``(qualified path, length, mtime ms)`` of every file under
+        ``p`` (``p`` itself when it is a file), sorted; None when ``p``
+        is absent. Equal listings mean an unchanged file set — the
+        validity key for anything derived from the files' contents."""
+        path = self._Path(p)
+        if not self._fs.exists(path):
+            return None
+        out = []
+        it = self._fs.listFiles(path, True)
+        while it.hasNext():
+            st = it.next()
+            out.append((st.getPath().toString(), int(st.getLen()), int(st.getModificationTime())))
+        return tuple(sorted(out))
+
     def has_visible_files(self, p: str) -> bool:
         """True when ``p`` contains at least one non-hidden entry — the
         "does this dataset exist for a reader" probe ('_'/'.'-prefixed

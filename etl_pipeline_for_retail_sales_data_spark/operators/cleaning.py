@@ -114,19 +114,23 @@ def validate(df: DataFrame, required_columns: Sequence[str], *, non_negative: Se
     VERBATIM messages and check order (empty → missing columns →
     negatives column-by-column; scripts/extraction.py:86-93,
     scripts/loading.py:58-73) — pinned against the reference text in
-    tests/test_retail_golden.py. Returns df for chaining. The
-    emptiness/negativity checks are actions — call at stage boundaries
-    only, never per-row. All negative columns are checked in ONE
-    aggregate pass (boolean max per column), unlike the reference's
-    per-column scans."""
-    if df.isEmpty():
-        raise ValueError("DataFrame is empty")
+    tests/test_retail_golden.py. Returns df for chaining. ONE action
+    (call at stage boundaries only, never per-row): a single aggregate
+    yields the row count and a negative flag (boolean max) per column,
+    unlike the reference's per-column scans. The missing-columns check
+    reads only the schema; the flags are skipped when it will fail, so a
+    missing column still reports after emptiness, never as an analysis
+    error."""
     missing = [c for c in required_columns if c not in df.columns]
+    negatives = [] if missing else list(non_negative)
+    row = df.select(
+        F.count(F.lit(1)).alias("n"), *[F.max(F.col(c) < 0).alias(f"neg{i}") for i, c in enumerate(negatives)]
+    ).first()
+    if row["n"] == 0:
+        raise ValueError("DataFrame is empty")
     if missing:
         raise ValueError(f"Missing required columns: {missing}")
-    if non_negative:
-        flags = df.select([F.max(F.col(c) < 0).alias(c) for c in non_negative]).first()
-        for c in non_negative:
-            if flags[c]:
-                raise ValueError(NEGATIVE_MESSAGES.get(c, f"Found negative values in column '{c}'"))
+    for i, c in enumerate(negatives):
+        if row[f"neg{i}"]:
+            raise ValueError(NEGATIVE_MESSAGES.get(c, f"Found negative values in column '{c}'"))
     return df

@@ -861,7 +861,7 @@ def recover_state(spark: SparkSession, state_dir: str) -> dict[str, int]:
             if name.startswith(".staged-"):
                 fs.delete(_join(root, name), True)
                 actions["rolled_back"] += 1
-        if _recover_swap(fs, root) != "ok":
+        if _recover_swap(fs, root) in ("rolled_forward", "rolled_back"):
             actions["compact_settled"] += 1
     actions["recentroid_settled"] = _recover_recentroid(spark, fs, state_dir)
     for rel in STATE_ROOTS:

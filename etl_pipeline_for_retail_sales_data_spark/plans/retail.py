@@ -1,17 +1,31 @@
 """The composed retail pipeline — the reference's observable end-to-end
-behavior (extract → transform → load, reference dags/etl_pipeline.py:88) as
-ONE lazy DataFrame lineage.
+behavior (extract → transform → load, reference dags/etl_pipeline.py:88).
 
-The reference's three process-separated tasks with JSON/XCom
-materialization between them (SURVEY.md §3.1) collapse into a single
-logical plan: scan → cast → union → dropna → positive-filter →
-partial+final hash agg (one exchange on product_id) → sort → sink.
+Transform is one lazy DataFrame lineage: scan → cast → union → dropna →
+positive-filter → partial+final hash agg (one exchange on product_id) →
+sort. :func:`transform_sales` returns exactly that plan, so a caller that
+consumes the summary ONCE (every registry query: ``sales_summary`` is one
+collect) runs a single job graph with nothing written in between —
+``tests/test_plans.py`` pins that plan.
+
+The transform→load boundary is materialized, as in the reference, whose
+transform task hands its output to load as JSON over XCom
+(scripts/transformation.py:178). Load is several SEPARATE actions on the
+one summary: validation, then each sink (parquet, CSV, JDBC,
+write-audit-publish). Each action is its own query execution, so on a
+lazy summary every one of them would rescan and re-aggregate all raw
+input to rebuild a handful of rows. :func:`transform_sales_from_strings`
+— the load pipeline's entry — therefore returns the summary through
+``cachectl.shared_frame``: one eager reliable checkpoint (disk files, no
+persisted blocks, reclaimed by the ContextCleaner), after which every
+load-side action reads only the materialized summary.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..cachectl import shared_frame
 from ..operators.aggregate import aggregate_sales, summary_ordered
 from ..operators.cleaning import clean_sales, to_typed, validate
 from ..operators.union_ops import union_sources
@@ -29,8 +43,10 @@ def transform_sales(*sources: DataFrame) -> DataFrame:
 
 def transform_sales_from_strings(*raw_sources: DataFrame) -> DataFrame:
     """Hostile-typing mode (FIXTURES.md F5): inputs arrive all-string as in
-    the reference's actual transport; cast layer (P2/P4) runs first."""
-    return transform_sales(*[to_typed(df) for df in raw_sources])
+    the reference's actual transport; cast layer (P2/P4) runs first.
+    Eager: the summary comes back materialized (module docstring), so
+    validation and every sink read it instead of the raw inputs."""
+    return shared_frame(transform_sales(*[to_typed(df) for df in raw_sources]))
 
 
 def retail_summary(spark: SparkSession, sf_dir: str) -> DataFrame:

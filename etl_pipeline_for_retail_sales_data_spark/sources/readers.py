@@ -7,7 +7,11 @@ end-to-end, SURVEY.md §1.3).
 
 Scale notes: parquet scans get predicate pushdown + column pruning from
 Catalyst for free as long as callers keep expressions declarative. Readers
-here never call an action.
+here never call an action, but a schema-less ``spark.read.parquet`` is not
+free: inferring the schema runs one Spark job that reads a footer. Every
+registry query reads its tables through :func:`load_table`, which infers a
+table's schema once and hands it to later reads of the unchanged files, so
+those build their plans without a job.
 """
 
 from __future__ import annotations
@@ -16,14 +20,45 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..fsutil import HadoopFS
 from ..schemas import SALES_SCHEMA, TESTDATA_TABLES
 from ..session import configure_session
+
+#: Session confs that change the schema Spark infers from parquet footers.
+PARQUET_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# path -> ((file listing, schema confs), the schema inferred under them):
+# one entry per path, replaced whenever its key changes
+_inferred_schemas: dict[str, tuple[tuple, T.StructType]] = {}
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Lazy parquet scan that infers the schema of ``path`` once.
+
+    The inferred schema is kept under the path's file listing (name,
+    size, mtime of every file, read through the Hadoop FS) and the
+    schema-conversion confs; a later read with the same key passes it
+    via ``spark.read.schema`` and skips the footer job. A rewritten,
+    added or removed file, or a changed conf, re-infers."""
+    key = (HadoopFS(spark, path).listing(path), tuple(spark.conf.get(c) for c in PARQUET_SCHEMA_CONFS))
+    known = _inferred_schemas.get(path)
+    if known is not None and known[0] == key:
+        return spark.read.schema(known[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _inferred_schemas[path] = (key, df.schema)
+    return df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Lazy parquet scan of one driver testdata table (TESTDATA.md)."""
     configure_session(spark)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> dict[str, DataFrame]:

@@ -14,8 +14,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import configure_session
-from ..sources.readers import normalize_event_ts
+from ..sources.readers import load_table, normalize_event_ts
 
 
 def hourly_event_stream(spark: SparkSession, sf_dir: str, watermark: str = "1 hour") -> DataFrame:
@@ -61,11 +60,11 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events parquet with ``ts`` normalized to
     TimestampType. The file source needs a directory + declared schema:
     stream the sf dir with a glob filter pinned to the one file, and take
-    the schema from a footer-only batch read so the stream tracks whatever
-    physical ts type the driver generated (see readers.normalize_event_ts)."""
-    configure_session(spark)
+    the schema from the batch reader (``load_table``: one footer job the
+    first time, none after) so the stream tracks whatever physical ts
+    type the testdata carries (see readers.normalize_event_ts)."""
     path = f"{sf_dir}/events.parquet"
-    schema = spark.read.parquet(path).schema
+    schema = load_table(spark, sf_dir, "events").schema
     # the file source accepts a DIRECTORY (the normal parquet layout) but
     # not a bare file ("basePath must be a directory"); the driver's
     # testdata is a single file, so pick per layout: stream the directory

@@ -357,6 +357,25 @@ def test_compaction_swap_crash_rolls_forward(spark, state_dir):
     assert not fs.exists(bands + "._compact_old")
 
 
+def test_recover_state_counts_only_settled_swaps(spark, state_dir):
+    """Roots that were never created are not settled compactions: a
+    clean exact-only state reports 0, and one crashed swap (root renamed
+    to ``._compact_old``, no complete tmp) reports exactly 1 and is
+    rolled back."""
+    from etl_pipeline_for_retail_sales_data_spark.plans.incremental_corpus import recover_state
+
+    ingest_batch(spark, _docs(spark, [(1, "a"), (2, "b")]), state_dir)
+    assert recover_state(spark, state_dir)["compact_settled"] == 0
+
+    fps = f"{state_dir}/fingerprints"
+    fs = HadoopFS(spark, state_dir)
+    assert fs.rename(fps, fps + "._compact_old")
+    assert recover_state(spark, state_dir)["compact_settled"] == 1
+    assert fs.exists(fps) and not fs.exists(fps + "._compact_old")
+    assert recover_state(spark, state_dir)["compact_settled"] == 0
+    assert spark.read.parquet(fps).count() == 2
+
+
 def _lsh_tables_fixture():
     from etl_pipeline_for_retail_sales_data_spark.queries_registry import _lsh_tables
 

@@ -23,6 +23,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import statistics
 import subprocess
 import sys
@@ -60,15 +61,19 @@ print("ABRESULT " + json.dumps(out))
 """
 
 
-def run_side(checkout: str, sf: str, names: list[str]) -> dict[str, float]:
+def run_side(checkout: str, sf: str, names: list[str], cwd: str) -> dict[str, float]:
+    """One leg in its own process. Both legs share the neutral ``cwd``,
+    so relative-path state (spark-warehouse, the Derby metastore) is the
+    same on either side; the checkout is PREPENDED to PYTHONPATH, which
+    executor Python workers inherit."""
     env = dict(os.environ)
-    env["PYTHONPATH"] = checkout
+    env["PYTHONPATH"] = os.pathsep.join(p for p in (checkout, env.get("PYTHONPATH")) if p)
     proc = subprocess.run(
         [sys.executable, "-c", _RUNNER, checkout, sf, ",".join(names)],
         capture_output=True,
         text=True,
         env=env,
-        cwd=checkout,
+        cwd=cwd,
     )
     for line in proc.stdout.splitlines():
         if line.startswith("ABRESULT "):
@@ -97,6 +102,7 @@ def main() -> None:
         ap.error("no queries given")
 
     wt = tempfile.mkdtemp(prefix="ab-bench-A-")
+    cwd = tempfile.mkdtemp(prefix="ab-bench-cwd-")
     subprocess.run(
         ["git", "-C", ROOT, "worktree", "add", "--detach", wt, args.rev],
         check=True,
@@ -106,8 +112,8 @@ def main() -> None:
         a_runs: list[dict[str, float]] = []
         b_runs: list[dict[str, float]] = []
         for rep in range(args.reps):
-            a_runs.append(run_side(wt, args.sf, names))
-            b_runs.append(run_side(ROOT, args.sf, names))
+            a_runs.append(run_side(wt, args.sf, names, cwd))
+            b_runs.append(run_side(ROOT, args.sf, names, cwd))
             print(f"pair {rep + 1}/{args.reps} done", flush=True)
         result = {
             "rev_a": subprocess.run(
@@ -149,6 +155,7 @@ def main() -> None:
             ["git", "-C", ROOT, "worktree", "remove", "--force", wt],
             capture_output=True,
         )
+        shutil.rmtree(cwd, ignore_errors=True)
 
 
 if __name__ == "__main__":
