@@ -10,16 +10,14 @@ runs query after query.  This module is the repo-wide discipline:
   the operator* (iterative loops, threshold probes) and guarantees the
   release on exit, exception or not.
 
-- :func:`finalize_iterative` — the end-of-loop materialization for
-  iterative operators (PageRank, label propagation, k-means, BPE, MMR).
-  A final ``localCheckpoint(eager=True)`` would pin the result's blocks
-  in the storage pool for the rest of the session (an unmaterialized /
-  unpersisted local checkpoint cannot recompute across its truncated
-  lineage, so nobody may ever release it).  Instead the final state is
-  written to a RELIABLE checkpoint (disk files): ``getPersistentRDDs``
-  stays empty, the returned frame re-reads the files on demand, and the
-  files live outside the executor storage pool entirely — exactly what
-  a production cluster does with an HDFS/S3 checkpoint dir.
+- :func:`shared_frame` — materialization without persisted blocks, for
+  the end of an iterative operator (PageRank, label propagation,
+  k-means, BPE, MMR) and for a frame several separate executions read.
+  The frame is written to a RELIABLE checkpoint (disk files):
+  ``getPersistentRDDs`` stays empty, the returned frame re-reads the
+  files on demand, and the files live outside the executor storage pool
+  entirely — exactly what a production cluster does with an HDFS/S3
+  checkpoint dir.
 
 - Reuse-not-cache: operators whose expensive frame feeds several plan
   branches at COLLECT time (inverted-index self-joins, banded LSH) do
@@ -57,50 +55,46 @@ def ensure_checkpoint_dir(spark: SparkSession) -> str:
     return path
 
 
-def finalize_iterative(df: DataFrame) -> DataFrame:
-    """Materialize the final state of an iterative operator WITHOUT
-    leaving persisted blocks behind: reliable (disk) checkpoint, eager.
-
-    The caller must keep its intermediate (local) checkpoints alive
-    until this returns — the final round's plan reads them exactly once
-    more during the checkpoint write — then release them all.
-    """
-    ensure_checkpoint_dir(df.sparkSession)
-    return df.checkpoint(eager=True)
-
-
 def shared_frame(df: DataFrame) -> DataFrame:
-    """Materialize a frame that MULTIPLE branches of one returned plan
-    consume — eager RELIABLE checkpoint, zero persisted blocks.
+    """Materialize ``df`` as an eager RELIABLE checkpoint (disk files,
+    zero persisted blocks). Two reasons to use it:
 
-    When to use it (r12, guide §2.4/§5 — and when NOT to): AQE stage
-    reuse already deduplicates plan branches whose canonicalized
-    exchanges match (identically-pruned self-join sides — accumulator-
-    verified in r12, correcting r11's initial-plan reading), so
-    checkpointing those is pure write+read overhead (measured
-    regressions, plans/r12/ab_shared_frame.json). Reach for this ONLY
-    when a recompute is real: (a) a construction-time PROBE is a
-    separate execution and cannot share stages with the main collect
-    (the salted-ngram p99 path — A/B 1.5×), (b) consumer branches
-    prune to different column sets and their exchanges cannot
-    canonicalize equal, or (c) the caller runs SEVERAL SEPARATE ACTIONS
-    on the one returned frame (validate, then each sink — the retail
-    transform→load boundary, plans/retail.py): every action is its own
-    query execution, so no AQE stage reuse spans them and each would
-    rerun the whole lineage. Storage pool untouched (``getPersistentRDDs``
-    stays empty — the cache-hygiene contract); files live in the
-    checkpoint dir (HDFS/S3 on a cluster) and are reclaimed by the
-    ContextCleaner when the frame is GC'd
-    (``spark.cleaner.referenceTracking.cleanCheckpoints=true``,
+    1. The final state of an ITERATIVE operator (PageRank, label
+       propagation, k-means, BPE, MMR). A final
+       ``localCheckpoint(eager=True)`` would pin the result's blocks in
+       the storage pool for the rest of the session (an unpersisted
+       local checkpoint cannot recompute across its truncated lineage,
+       so nobody may ever release it). The caller must keep its
+       intermediate (local) checkpoints alive until this returns — the
+       final round's plan reads them exactly once more during the
+       checkpoint write — then release them all.
+    2. A frame that SEVERAL consumers read where a recompute is real.
+       AQE stage reuse already deduplicates plan branches whose
+       canonicalized exchanges match (identically-pruned self-join
+       sides), so checkpointing those is pure write+read overhead
+       (measured regressions, plans/r12/ab_shared_frame.json). Use it
+       only when (a) a construction-time PROBE is a separate execution
+       and cannot share stages with the main collect (the salted-ngram
+       p99 path — A/B 1.5×), (b) consumer branches prune to different
+       column sets and their exchanges cannot canonicalize equal, or
+       (c) the caller runs SEVERAL SEPARATE ACTIONS on the one returned
+       frame (validate, then each sink — the retail transform→load
+       boundary, plans/retail.py): every action is its own query
+       execution, so no AQE stage reuse spans them and each would rerun
+       the whole lineage. The trade at 100 TB: ONE frame-sized
+       sequential write (+ per-consumer reads) replaces k corpus map
+       passes + k redundant shuffle writes — a win for k >= 2 whenever
+       the map stage costs more than the frame's serialized bytes
+       (measured per caller, numbers in OPTIMIZATION_r12.md).
+
+    Either way the storage pool is untouched (``getPersistentRDDs``
+    stays empty — the cache-hygiene contract); the files live in the
+    checkpoint dir (HDFS/S3 on a cluster), the returned frame re-reads
+    them on demand, and the ContextCleaner reclaims them when the frame
+    is GC'd (``spark.cleaner.referenceTracking.cleanCheckpoints=true``,
     session.py). The partitioning survives (LogicalRDD carries the
     physical outputPartitioning), so a join keyed like the checkpointed
-    repartition still plans exchange-free.
-
-    The trade at 100 TB: ONE frame-sized sequential write (+ per-consumer
-    reads) replaces k corpus map passes + k redundant shuffle writes —
-    a win for k >= 2 whenever the map stage is more expensive than the
-    frame's serialized bytes (every Arrow/md5/fft stage in this repo;
-    measured per caller, numbers in OPTIMIZATION_r12.md)."""
+    repartition still plans exchange-free."""
     ensure_checkpoint_dir(df.sparkSession)
     return df.checkpoint(eager=True)
 

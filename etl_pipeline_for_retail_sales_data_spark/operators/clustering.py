@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..cachectl import finalize_iterative, local_ckpt, release_ckpt
+from ..cachectl import local_ckpt, release_ckpt, shared_frame
 from ..functions import spread
 from .similarity import as_double
 
@@ -109,7 +109,7 @@ def kmeans_assign(
     # final assignment to a RELIABLE checkpoint so every local checkpoint
     # releases here — no session-lifetime blocks (cachectl.py)
     cols = ["vec_id", "cluster", "dist"] + (["v"] if keep_vec else [])
-    out = finalize_iterative(assigned.select(*cols))
+    out = shared_frame(assigned.select(*cols))
     pts.unpersist()
     for frame in rounds:
         release_ckpt(frame)
@@ -376,7 +376,7 @@ def semantic_dedup(
             rounds = getattr(capped, "_split_rounds", [])
             # reliable checkpoint, then release the split rounds' blocks —
             # the same finalize/release cycle as kmeans_assign (cachectl.py)
-            base = finalize_iterative(capped.select("vec_id", "cluster", "uv"))
+            base = shared_frame(capped.select("vec_id", "cluster", "uv"))
             for fr in rounds:
                 release_ckpt(fr)
     # reuse-not-cache (cachectl.py): the assignment (file-backed after

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..cachectl import finalize_iterative, local_ckpt, release_ckpt, shared_frame
+from ..cachectl import local_ckpt, release_ckpt, shared_frame
 from ..functions import spread
 from .text import TOKEN_RE
 
@@ -716,7 +716,7 @@ def connected_components(
     # materialize the fixpoint to a RELIABLE checkpoint (disk files, no
     # storage-pool blocks), then release every local checkpoint — the
     # session ends the query with getPersistentRDDs() empty (cachectl.py)
-    out = finalize_iterative(out)
+    out = shared_frame(out)
     release_ckpt(labels)
     release_ckpt(sym)
     return out

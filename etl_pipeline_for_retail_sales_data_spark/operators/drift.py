@@ -31,7 +31,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..cachectl import finalize_iterative
+from ..cachectl import shared_frame
 
 
 # critical values for alpha = 0.05 by degrees of freedom (df = k - 1)
@@ -57,7 +57,7 @@ def chisq_drift(
     # so the bounded aggregate goes to a reliable checkpoint: the fact
     # table is scanned exactly once, every branch re-reads the files, and
     # nothing sits in the storage pool (cachectl.py)
-    counts = finalize_iterative(
+    counts = shared_frame(
         df.select(period.alias("period"), category.alias("category"))
         .groupBy("period", "category")
         .agg(F.count("*").alias("cnt"))
@@ -129,7 +129,7 @@ def psi_drift(
     floored to 1e-4; empirically hash-stable at every SF (ln ulp
     differences sit ~1e-12 from the rounding boundaries)."""
     # same tiny-aggregate reliable-checkpoint shape as chisq_drift
-    counts = finalize_iterative(
+    counts = shared_frame(
         df.select(period.alias("period"), category.alias("category"))
         .groupBy("period", "category")
         .agg(F.count("*").alias("cnt"))

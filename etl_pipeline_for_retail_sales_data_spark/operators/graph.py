@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..cachectl import finalize_iterative, local_ckpt, release_ckpt
+from ..cachectl import local_ckpt, release_ckpt, shared_frame
 
 
 def pagerank(
@@ -132,7 +132,7 @@ def pagerank(
     # demand) so every local checkpoint and cache can be released here —
     # the query ends with getPersistentRDDs() empty (cachectl.py); on a
     # cluster the checkpoint dir is HDFS/S3 and doubles as fault tolerance
-    out = finalize_iterative(ranks.select(F.col("id").alias(id_col), "rank"))
+    out = shared_frame(ranks.select(F.col("id").alias(id_col), "rank"))
     ew.unpersist()
     out_deg.unpersist()
     dangling_ids.unpersist()

@@ -45,7 +45,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..cachectl import finalize_iterative, local_ckpt, release_ckpt
+from ..cachectl import local_ckpt, release_ckpt, shared_frame
 from ..functions import spread
 from .similarity import as_double
 
@@ -182,7 +182,7 @@ def pq_train(
     # tiny (m*ksub rows) but long-lived: a RELIABLE checkpoint lets every
     # local checkpoint release here instead of pinning storage-pool blocks
     # for the session (cachectl.py)
-    out = finalize_iterative(codebooks)
+    out = shared_frame(codebooks)
     subs.unpersist()
     for frame in rounds:
         release_ckpt(frame)

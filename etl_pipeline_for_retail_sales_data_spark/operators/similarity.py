@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..cachectl import finalize_iterative, local_ckpt, release_ckpt
+from ..cachectl import local_ckpt, release_ckpt, shared_frame
 from ..functions import spread
 
 
@@ -693,7 +693,7 @@ def mmr_topk(
         rounds.append(state)
     # final selection to a RELIABLE checkpoint so every round's local
     # checkpoint (and the cand/cc caches) release here (cachectl.py)
-    out = finalize_iterative(
+    out = shared_frame(
         state.filter(F.col("rnk").isNotNull()).select(
             "q_id",
             F.col("cand").alias("doc_id"),

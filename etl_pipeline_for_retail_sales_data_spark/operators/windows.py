@@ -15,7 +15,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..cachectl import finalize_iterative
+from ..cachectl import shared_frame
 
 
 def topk_per_group(
@@ -166,7 +166,7 @@ def distributed_rank(
     # without leaving session-lifetime storage-pool blocks behind (a
     # persist here could never be released — the returned plan needs the
     # pinned frame; cachectl.py)
-    local = finalize_iterative(ranged.withColumn("__lr", F.row_number().over(w) - 1))
+    local = shared_frame(ranged.withColumn("__lr", F.row_number().over(w) - 1))
     counts = local.groupBy("__pid").agg(F.count("*").alias("__c"))
     wo = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
     offsets = counts.select(

@@ -54,6 +54,19 @@ bucketed scan from the on-disk bucket ids and re-accept duplicates;
 changed LSH params silently collapse recall). Omitted parameters
 default FROM the pinned meta, so steady-state callers pass none.
 
+One transaction for every leg: each ``ingest_batch*`` runs the same
+skeleton, :func:`_ingest` — writer lease, :func:`recover_state`, the
+epoch guard (a committed epoch returns None before the batch is read),
+:func:`_resolve_meta`, ``batch.count()``, the leg's classification,
+then the journal :func:`_commit`, whose second half
+(:func:`_roll_forward`) is also what recovery runs for a crashed
+marker. A leg is only its key derivation, its funnel counts and its
+staged writes; the exists-semantics legs (near-dup, embdup, semantic)
+also share the funnel tail (:func:`_exists_funnel`). The sketch leg
+shares the prologue and commits by directory swap instead
+(:func:`_swap_in`, the same swap compaction and centroid migration
+use, settled by :func:`_recover_swap`).
+
 Null text: a null-text document digests to the sentinel ``"null"``
 (md5 never returns a 4-char string), so null-text duplicates dedupe
 against each other in the exact and Bloom loops exactly like any other
@@ -329,8 +342,7 @@ def _resolve_meta(
         return out
     missing = sorted(k for k, v in given.items() if v is None)
     if missing:
-        rels = _LEG_ROOTS.get(leg, ())
-        if any(fs.has_visible_files(_join(state_dir, rel)) for rel in rels):
+        if _leg_has_data(fs, state_dir, leg):
             raise StateParamMismatch(
                 f"{leg} state at {state_dir} already holds data but has no "
                 f"pinned _meta (built before parameter pinning); defaulting "
@@ -344,6 +356,12 @@ def _resolve_meta(
     fs.mkdirs(_meta_dir(state_dir))
     fs.touch_atomic(path, json.dumps(out, sort_keys=True))
     return out
+
+
+def _leg_has_data(fs: HadoopFS, state_dir: str, leg: str) -> bool:
+    return any(
+        fs.has_visible_files(_join(state_dir, rel)) for rel in _LEG_ROOTS.get(leg, ())
+    )
 
 
 def _meta_buckets(spark: SparkSession, state_dir: str, leg: str, n_buckets) -> int:
@@ -362,11 +380,7 @@ def _meta_buckets(spark: SparkSession, state_dir: str, leg: str, n_buckets) -> i
         return int(pinned)
     if n_buckets is not None:
         return int(n_buckets)
-    fs = HadoopFS(spark, state_dir)
-    if any(
-        fs.has_visible_files(_join(state_dir, rel))
-        for rel in _LEG_ROOTS.get(leg, ())
-    ):
+    if _leg_has_data(HadoopFS(spark, state_dir), state_dir, leg):
         raise StateParamMismatch(
             f"{leg} state at {state_dir} holds data but no pinned _meta is "
             f"readable and no n_buckets was passed — defaulting to "
@@ -615,18 +629,11 @@ def maintain_state(
         recovered = recover_state(spark, state_dir)
     out["recovered_forward"] = recovered["rolled_forward"]
     out["recovered_back"] = recovered["rolled_back"]
-    compactors = {
-        "exact": compact_fingerprints,
-        "neardup": compact_neardup_state,
-        "embdup": compact_embdup_state,
-        "bloom": compact_bloom_state,
-        "semantic": compact_semantic_state,
-    }
-    for leg, fn in compactors.items():
+    for leg in _STATE_KEYS:
         # only legs with pinned meta have ever ingested; compacting the
         # rest would just stat empty roots
         if state_meta(spark, state_dir, leg):
-            out[f"compacted_{leg}"] = fn(spark, state_dir)
+            out[f"compacted_{leg}"] = _compact_state(spark, state_dir, leg, None)
     out["log_entries"] = compact_ingest_log(spark, state_dir)
     out["epochs_pruned"] = prune_epochs(spark, state_dir, keep_epochs_per_ns)
     return out
@@ -639,6 +646,14 @@ _LEG_ROOTS = {
     "bloom": ("corpus_bloom", "bloom_bits"),
     "semantic": ("corpus_semantic", "semantic_members"),
     "sketch": ("kmv_sketch",),
+}
+# the bucket (= join) columns of each journal leg's state root
+_STATE_KEYS = {
+    "exact": ["digest"],
+    "neardup": ["band", "bk"],
+    "embdup": ["tbl", "bucket"],
+    "bloom": ["pos"],
+    "semantic": ["cluster"],
 }
 
 
@@ -678,8 +693,7 @@ def state_report(spark: SparkSession, state_dir: str) -> dict:
         for big in ("tables", "centroids"):
             if big in summary:
                 summary[big] = (
-                    f"<{len(summary[big])} pinned, "
-                    f"md5={hashlib.md5(json.dumps(summary[big]).encode()).hexdigest()[:12]}>"
+                    f"<{len(summary[big])} pinned, md5={_md5_json(summary[big])[:12]}>"
                 )
         row = {"meta": summary}
         for key, rel in (("corpus_rows", crel), ("state_rows", srel)):
@@ -848,11 +862,7 @@ def recover_state(spark: SparkSession, state_dir: str) -> dict[str, int]:
             fs.delete(_join(jdir, token), False)
             continue
         meta = json.loads(fs.read_text(_join(jdir, token)) or "{}")
-        for rel in meta.get("roots", []):
-            _publish_staged(fs, _join(state_dir, rel), token)
-        if meta.get("epoch") is not None:
-            _record_epoch(fs, state_dir, meta["epoch"])
-        _retire_marker(fs, state_dir, token)
+        _roll_forward(fs, state_dir, token, meta.get("roots", []), meta.get("epoch"))
         actions["rolled_forward"] += 1
 
     for rel in STATE_ROOTS:
@@ -867,6 +877,26 @@ def recover_state(spark: SparkSession, state_dir: str) -> dict[str, int]:
     for rel in STATE_ROOTS:
         _refresh_state_table(spark, _join(state_dir, rel))
     return actions
+
+
+def _roll_forward(
+    fs: HadoopFS,
+    state_dir: str,
+    token: str,
+    roots: list[str],
+    epoch_id=None,
+    _crash: str | None = None,
+) -> None:
+    """Everything after the journal marker: publish each staged root,
+    record the epoch, retire the marker into the commit log. Idempotent,
+    so :func:`_commit` and :func:`recover_state` share it."""
+    for i, rel in enumerate(roots):
+        _publish_staged(fs, _join(state_dir, rel), token)
+        if _crash == "mid_publish" and i == 0:
+            raise SimulatedCrash("mid_publish")
+    if epoch_id is not None:
+        _record_epoch(fs, state_dir, epoch_id)
+    _retire_marker(fs, state_dir, token)
 
 
 def _commit(
@@ -887,20 +917,153 @@ def _commit(
     _write_marker(fs, state_dir, token, staged, epoch_id)
     if _crash == "after_journal":
         raise SimulatedCrash("after_journal")
-    for i, rel in enumerate(staged):
-        _publish_staged(fs, _join(state_dir, rel), token)
-        if _crash == "mid_publish" and i == 0:
-            raise SimulatedCrash("mid_publish")
-    if epoch_id is not None:
-        _record_epoch(fs, state_dir, epoch_id)
-    _retire_marker(fs, state_dir, token)
+    _roll_forward(fs, state_dir, token, staged, epoch_id, _crash)
     for rel in staged:
         _refresh_state_table(spark, _join(state_dir, rel))
 
 
 # ---------------------------------------------------------------------------
-# ingestion loops
+# ingestion loops: one transaction, one classification per leg
 # ---------------------------------------------------------------------------
+
+
+def _ingest(
+    spark: SparkSession,
+    batch: DataFrame,
+    state_dir: str,
+    leg: str,
+    given: dict,
+    defaults: dict,
+    classify,
+    extra: dict | None = None,
+    epoch_id=None,
+    _crash: str | None = None,
+    _locked: bool = False,
+    journal: bool = True,
+):
+    """The ingest transaction every leg runs: writer lease and
+    :func:`recover_state` (both skipped when the caller already holds
+    them, ``_locked``), the epoch guard (``None`` before the batch is
+    read, checked after recovery so a rolled-forward epoch is
+    recognized), :func:`_resolve_meta` (``n_buckets`` defaults to
+    DEFAULT_BUCKETS for every leg), ``batch.count()``, then
+    ``classify(eff, n_batch, stage)`` and the journal :func:`_commit`.
+
+    ``classify`` derives the leg's keys, counts its funnel, returns the
+    leg's result and calls ``stage(rel, df, bucket_cols=None)`` for each
+    dataset it appends — a plain parquet write, or a write bucketed into
+    the pinned ``n_buckets``, into ``<rel>/.staged-<token>``. The commit
+    runs when anything was staged or an ``epoch_id`` is set (an
+    all-duplicate epoch then commits an empty marker, so its redelivery
+    skips too). ``journal=False`` is the sketch leg, whose ``classify``
+    commits by directory swap itself."""
+    with nullcontext() if _locked else _writer_lease(spark, state_dir):
+        if not _locked:
+            recover_state(spark, state_dir)
+        if epoch_id is not None and epoch_committed(spark, state_dir, epoch_id):
+            return None
+        fs = HadoopFS(spark, state_dir)
+        eff = _resolve_meta(
+            fs, state_dir, leg, given, {"n_buckets": DEFAULT_BUCKETS, **defaults}, extra
+        )
+        n_batch = batch.count()
+        token = uuid.uuid4().hex
+        staged: list[str] = []
+
+        def stage(rel: str, df: DataFrame, bucket_cols: list[str] | None = None) -> None:
+            path = _staged_dir(_join(state_dir, rel), token)
+            if bucket_cols is None:
+                df.write.parquet(path)
+            else:
+                _staged_bucketed_write(df, path, bucket_cols, int(eff["n_buckets"]))
+            staged.append(rel)
+
+        out = classify(eff, n_batch, stage)
+        if journal and (staged or epoch_id is not None):
+            _commit(spark, state_dir, staged, token, epoch_id=epoch_id, _crash=_crash)
+    return out
+
+
+def _check_state_mode(state_mode: str | None) -> None:
+    if state_mode is not None and state_mode not in ("all", "keepers"):
+        raise ValueError(f"state_mode must be 'all' or 'keepers', got {state_mode!r}")
+
+
+def _md5_json(value) -> str:
+    return hashlib.md5(json.dumps(value).encode()).hexdigest()
+
+
+def _key_digest(
+    spark: SparkSession, state_dir: str, leg: str, name: str, value, what: str
+) -> str | None:
+    """Digest of a leg's key-function payload (embdup ``tables``,
+    semantic ``centroids``), which :func:`_resolve_meta` validates
+    against the pinned one. Omitting the payload (None) is allowed only
+    once the state's first ingest pinned it into ``_meta``."""
+    if value is not None:
+        return _md5_json(value)
+    if name not in state_meta(spark, state_dir, leg):
+        raise ValueError(
+            f"first {leg} ingest for this state_dir must pass the {what} "
+            "(they pin into _meta and later calls may omit them)"
+        )
+    return None
+
+
+def _batch_unique(batch: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """Within-batch exact dedup of the digest legs (exact, Bloom): the
+    batch with its text digest, keeping min(id) per digest."""
+    keyed = batch.select(_text_digest(text_col), *batch.columns)
+    keeper = keyed.groupBy("digest").agg(F.min(id_col).alias(id_col))
+    return keyed.join(keeper, ["digest", id_col])
+
+
+def _exists_funnel(
+    batch: DataFrame,
+    keys: DataFrame,
+    hist_ids: DataFrame,
+    within_ids: DataFrame,
+    eff: dict,
+    n_batch: int,
+    stage,
+    leg: str,
+    tag: str,
+    id_col: str,
+) -> dict[str, int]:
+    """Shared tail of the exists-semantics legs (near-dup, embdup,
+    semantic): count the historical ids and the within-batch ids that
+    are not also historical, stage the accepted rows into the leg's
+    corpus root and ``keys`` (the state rows) into its bucketed state
+    root, and return ``{"n_batch", "n_hist_<tag>", "n_within_<tag>",
+    "n_accepted"}``. Every consumer runs inside the scope, so the cache
+    releases with zero recompute (cachectl.py)."""
+    corpus_rel, state_rel = _LEG_ROOTS[leg]
+    keepers_only = eff["state_mode"] == "keepers"
+    with scoped_cache(hist_ids):
+        n_hist = hist_ids.count()
+        n_within = within_ids.join(hist_ids, id_col, "left_anti").count()
+        accepted = (
+            batch.join(hist_ids, id_col, "left_anti")
+            .join(within_ids, id_col, "left_anti")
+        )
+        n_accepted = accepted.count()
+        if n_accepted:
+            stage(corpus_rel, accepted)
+        # "all": seen-semantics — append EVERY batch row's keys (replays
+        # then classify 100% historical and append again: harmless
+        # duplicates in an existence-checked state; compaction collapses
+        # them). "keepers": only accepted rows' keys append, so the state
+        # follows the deduped corpus (_ingest_keyed)
+        if keepers_only:
+            keys = keys.join(accepted.select(id_col), id_col, "left_semi")
+        if (n_accepted if keepers_only else n_batch) > 0:
+            stage(state_rel, keys, _STATE_KEYS[leg])
+    return {
+        "n_batch": n_batch,
+        f"n_hist_{tag}": n_hist,
+        f"n_within_{tag}": n_within,
+        "n_accepted": n_accepted,
+    }
 
 
 def fingerprint_state(
@@ -963,35 +1126,15 @@ def ingest_batch(
     marker commits even for an all-duplicate batch (empty staged list),
     so every delivered epoch is skippable on redelivery. ``n_buckets``
     pins into ``_meta`` on first ingest and defaults from it after."""
-    with nullcontext() if _locked else _writer_lease(spark, state_dir):
-        if not _locked:
-            recover_state(spark, state_dir)
-        if epoch_id is not None and epoch_committed(spark, state_dir, epoch_id):
-            return None
-        fs = HadoopFS(spark, state_dir)
-        # the exact leg is INHERENTLY keeper-state: only novel digests
-        # append, and a dup's digest equals its keeper's digest by
-        # definition, so "all" vs "keepers" cannot differ — recorded in
-        # _meta at first pin (via extra, NOT given: it is not a caller
-        # parameter, so a pre-upgrade re-pin must not demand it)
-        eff = _resolve_meta(
-            fs, state_dir, "exact",
-            {"n_buckets": n_buckets}, {"n_buckets": DEFAULT_BUCKETS},
-            extra={"state_mode": "keepers"},
-        )
-        n_buckets = int(eff["n_buckets"])
-        corpus_root = _join(state_dir, "corpus")
-        fp_root = _join(state_dir, "fingerprints")
 
-        n_batch = batch.count()
-
+    def classify(eff: dict, n_batch: int, stage) -> dict[str, int]:
         # 1. within-batch exact dedup: keep min(doc_id) per digest
-        keyed = batch.select(_text_digest(text_col), *batch.columns)
-        keeper = keyed.groupBy("digest").agg(F.min(id_col).alias(id_col))
-        batch_unique = keyed.join(keeper, ["digest", id_col])
+        batch_unique = _batch_unique(batch, text_col, id_col)
         # 2. history check: one equi-join against the bucketed state — the
         # state side plans no Exchange, only the batch shuffles
-        hist = fingerprint_state(spark, state_dir, id_col, n_buckets).select("digest")
+        hist = fingerprint_state(
+            spark, state_dir, id_col, int(eff["n_buckets"])
+        ).select("digest")
         novel = batch_unique.join(hist, "digest", "left_anti")
         # every consumer (the unique count, the accepted count, both staged
         # writes) runs INSIDE this scope, so the caches release with zero
@@ -1000,37 +1143,27 @@ def ingest_batch(
         with scoped_cache(batch_unique, novel):
             n_unique = batch_unique.count()
             n_accepted = novel.count()
-
-            # 3. stage novel docs + their fingerprints, commit atomically;
-            # an epoch-tagged all-duplicate batch commits the (empty)
-            # marker so redelivery skips wholesale
-            token = uuid.uuid4().hex
-            staged: list[str] = []
+            # 3. stage novel docs + their fingerprints
             if n_accepted:
-                novel.drop("digest").write.parquet(_staged_dir(corpus_root, token))
-                _staged_bucketed_write(
-                    novel.select("digest", id_col),
-                    _staged_dir(fp_root, token),
-                    ["digest"],
-                    n_buckets,
-                )
-                staged = ["corpus", "fingerprints"]
-            if staged or epoch_id is not None:
-                _commit(
-                    spark,
-                    state_dir,
-                    staged,
-                    token,
-                    epoch_id=epoch_id,
-                    _crash=_crash,
-                )
+                stage("corpus", novel.drop("digest"))
+                stage("fingerprints", novel.select("digest", id_col), ["digest"])
+        return {
+            "n_batch": n_batch,
+            "n_within_dup": n_batch - n_unique,
+            "n_hist_dup": n_unique - n_accepted,
+            "n_accepted": n_accepted,
+        }
 
-    return {
-        "n_batch": n_batch,
-        "n_within_dup": n_batch - n_unique,
-        "n_hist_dup": n_unique - n_accepted,
-        "n_accepted": n_accepted,
-    }
+    # the exact leg is INHERENTLY keeper-state: only novel digests
+    # append, and a dup's digest equals its keeper's digest by
+    # definition, so "all" vs "keepers" cannot differ — recorded in
+    # _meta at first pin (via extra, NOT given: it is not a caller
+    # parameter, so a pre-upgrade re-pin must not demand it)
+    return _ingest(
+        spark, batch, state_dir, "exact", {"n_buckets": n_buckets}, {}, classify,
+        extra={"state_mode": "keepers"},
+        epoch_id=epoch_id, _crash=_crash, _locked=_locked,
+    )
 
 
 def ingest_batch_neardup(
@@ -1095,32 +1228,11 @@ def ingest_batch_neardup(
         )
         return bk.withColumnRenamed("doc_id", id_col) if id_col != "doc_id" else bk
 
-    res = _ingest_keyed(
-        spark,
-        batch,
-        state_dir,
-        keys_of=keys_of,
-        key_cols=("band", "bk"),
-        corpus_rel="corpus_neardup",
-        state_rel="neardup_bands",
-        id_col=id_col,
-        leg="neardup",
-        given={"k": k, "bands": bands, "n": n, "n_buckets": n_buckets},
-        defaults={**DEFAULT_MINHASH, "n_buckets": DEFAULT_BUCKETS},
-        state_mode=state_mode,
-        epoch_id=epoch_id,
-        _crash=_crash,
-        _locked=_locked,
+    return _ingest_keyed(
+        spark, batch, state_dir, "neardup", keys_of, id_col,
+        {"k": k, "bands": bands, "n": n, "n_buckets": n_buckets}, DEFAULT_MINHASH,
+        state_mode=state_mode, epoch_id=epoch_id, _crash=_crash, _locked=_locked,
     )
-    if res is None:
-        return None
-    n_batch, n_hist, n_within, n_accepted = res
-    return {
-        "n_batch": n_batch,
-        "n_hist_neardup": n_hist,
-        "n_within_neardup": n_within,
-        "n_accepted": n_accepted,
-    }
 
 
 def ingest_batch_embdup(
@@ -1165,47 +1277,17 @@ def ingest_batch_embdup(
     :class:`StateParamMismatch`."""
     from ..operators.similarity import multitable_buckets
 
-    tables_digest = (
-        hashlib.md5(json.dumps(tables).encode()).hexdigest()
-        if tables is not None
-        else None
-    )
-    if tables is None and "tables" not in state_meta(spark, state_dir, "embdup"):
-        raise ValueError(
-            "first embdup ingest for this state_dir must pass the hyperplane "
-            "tables (they pin into _meta and later calls may omit them)"
-        )
+    digest = _key_digest(spark, state_dir, "embdup", "tables", tables, "hyperplane tables")
 
     def keys_of(eff: dict) -> DataFrame:
         return multitable_buckets(batch, eff["tables"], id_col=id_col, vec_col=vec_col)
 
-    res = _ingest_keyed(
-        spark,
-        batch,
-        state_dir,
-        keys_of=keys_of,
-        key_cols=("tbl", "bucket"),
-        corpus_rel="corpus_embdup",
-        state_rel="embdup_buckets",
-        id_col=id_col,
-        leg="embdup",
-        given={"tables_digest": tables_digest, "n_buckets": n_buckets},
-        defaults={"n_buckets": DEFAULT_BUCKETS},
-        meta_extra={"tables": tables} if tables is not None else None,
-        state_mode=state_mode,
-        epoch_id=epoch_id,
-        _crash=_crash,
-        _locked=_locked,
+    return _ingest_keyed(
+        spark, batch, state_dir, "embdup", keys_of, id_col,
+        {"tables_digest": digest, "n_buckets": n_buckets}, {},
+        extra={"tables": tables} if tables is not None else None,
+        state_mode=state_mode, epoch_id=epoch_id, _crash=_crash, _locked=_locked,
     )
-    if res is None:
-        return None
-    n_batch, n_hist, n_within, n_accepted = res
-    return {
-        "n_batch": n_batch,
-        "n_hist_embdup": n_hist,
-        "n_within_embdup": n_within,
-        "n_accepted": n_accepted,
-    }
 
 
 DEFAULT_SEMANTIC_THRESHOLD = 0.92
@@ -1288,59 +1370,21 @@ def ingest_batch_semantic(
     Returns ``{"n_batch", "n_hist_semdup", "n_within_semdup",
     "n_accepted"}`` — or ``None`` on a redelivered committed epoch.
 
-    Deliberately NOT routed through :func:`_ingest_keyed`: that engine's
-    classification shape is key EQUALITY + the bucket-min trick for
-    within-batch; this leg needs a predicate join (equality on the cell
-    AND a cosine verify) and a pairwise within-batch join — hooks for
-    both would turn the shared engine into configuration soup. The
-    commit protocol pieces (lease, recovery, meta, staged commit) ARE
-    the shared primitives both paths call."""
+    The leg shares the ingest transaction (:func:`_ingest`: lease,
+    recovery, epoch guard, meta, staged journal commit) and the
+    exists-semantics funnel tail with the keyed legs; its classification
+    stays its own. :func:`_ingest_keyed` classifies by key EQUALITY plus
+    the bucket-min trick within the batch; this leg needs a predicate
+    join (equality on the cell AND a cosine verify) and a pairwise
+    within-batch join."""
     from ..operators.clustering import assign_to_centroids
     from ..operators.similarity import dot, round6
 
-    cent_digest = (
-        hashlib.md5(json.dumps(centroids).encode()).hexdigest()
-        if centroids is not None
-        else None
-    )
-    if centroids is None and "centroids" not in state_meta(spark, state_dir, "semantic"):
-        raise ValueError(
-            "first semantic ingest for this state_dir must pass the centroids "
-            "(they pin into _meta and later calls may omit them)"
-        )
+    digest = _key_digest(spark, state_dir, "semantic", "centroids", centroids, "centroids")
+    _check_state_mode(state_mode)
 
-    with nullcontext() if _locked else _writer_lease(spark, state_dir):
-        if not _locked:
-            recover_state(spark, state_dir)
-        if epoch_id is not None and epoch_committed(spark, state_dir, epoch_id):
-            return None
-        fs = HadoopFS(spark, state_dir)
-        if state_mode is not None and state_mode not in ("all", "keepers"):
-            raise ValueError(
-                f"state_mode must be 'all' or 'keepers', got {state_mode!r}"
-            )
-        eff = _resolve_meta(
-            fs, state_dir, "semantic",
-            {
-                "centroids_digest": cent_digest,
-                "threshold": threshold,
-                "n_buckets": n_buckets,
-                "state_mode": state_mode,
-            },
-            {
-                "threshold": DEFAULT_SEMANTIC_THRESHOLD,
-                "n_buckets": DEFAULT_BUCKETS,
-                "state_mode": "all",
-            },
-            extra={"centroids": centroids} if centroids is not None else None,
-        )
+    def classify(eff: dict, n_batch: int, stage) -> dict[str, int]:
         thr = float(eff["threshold"])
-        n_buckets = int(eff["n_buckets"])
-        keepers_only = eff["state_mode"] == "keepers"
-        state_root = _join(state_dir, "semantic_members")
-        corpus_root = _join(state_dir, "corpus_semantic")
-
-        n_batch = batch.count()
         # null-vector rows join the member state under the SENTINEL cell
         # -1 (cosine is undefined for them but equality is not: a second
         # null-embedding doc IS a duplicate of the first — the exact
@@ -1357,7 +1401,8 @@ def ingest_batch_semantic(
         is_sentinel = F.col("A.cluster") == F.lit(-1)
         with scoped_cache(keys):
             state = _ensure_state_table(
-                spark, state_root, keys, ["cluster"], n_buckets
+                spark, _join(state_dir, "semantic_members"), keys,
+                _STATE_KEYS["semantic"], int(eff["n_buckets"]),
             )
             # historical: EXACT rounded cosine ≥ thr against the same
             # centroid cell's members — equi-key is the cluster (state
@@ -1390,43 +1435,24 @@ def ingest_batch_semantic(
                 .select(id_col)
                 .distinct()
             )
-            with scoped_cache(hist_ids):
-                n_hist = hist_ids.count()
-                n_within = within_ids.join(hist_ids, id_col, "left_anti").count()
-                accepted = (
-                    batch.join(hist_ids, id_col, "left_anti")
-                    .join(within_ids, id_col, "left_anti")
-                )
-                n_accepted = accepted.count()
-                staged: list[str] = []
-                token = uuid.uuid4().hex
-                if n_accepted:
-                    accepted.write.parquet(_staged_dir(corpus_root, token))
-                    staged.append("corpus_semantic")
-                # "all": seen-semantics — every batch member joins the
-                # state; "keepers": only accepted rows do (docstring)
-                state_new = (
-                    keys.join(accepted.select(id_col), id_col, "left_semi")
-                    if keepers_only
-                    else keys
-                )
-                if (n_accepted if keepers_only else n_batch) > 0:
-                    _staged_bucketed_write(
-                        state_new, _staged_dir(state_root, token),
-                        ["cluster"], n_buckets,
-                    )
-                    staged.append("semantic_members")
-                if staged or epoch_id is not None:
-                    _commit(
-                        spark, state_dir, staged, token,
-                        epoch_id=epoch_id, _crash=_crash,
-                    )
-    return {
-        "n_batch": n_batch,
-        "n_hist_semdup": n_hist,
-        "n_within_semdup": n_within,
-        "n_accepted": n_accepted,
-    }
+            return _exists_funnel(
+                batch, keys, hist_ids, within_ids, eff, n_batch, stage,
+                "semantic", "semdup", id_col,
+            )
+
+    return _ingest(
+        spark, batch, state_dir, "semantic",
+        {
+            "centroids_digest": digest,
+            "threshold": threshold,
+            "n_buckets": n_buckets,
+            "state_mode": state_mode,
+        },
+        {"threshold": DEFAULT_SEMANTIC_THRESHOLD, "state_mode": "all"},
+        classify,
+        extra={"centroids": centroids} if centroids is not None else None,
+        epoch_id=epoch_id, _crash=_crash, _locked=_locked,
+    )
 
 
 def compact_semantic_state(
@@ -1436,9 +1462,7 @@ def compact_semantic_state(
     replay-duplicated (vec_id, cluster, uv) member rows, rewrite
     bucketed, swap in. Single writer (lease-enforced); ``n_buckets``
     defaults from ``_meta``."""
-    return _compact_state(
-        spark, state_dir, "semantic_members", ["cluster"], "semantic", n_buckets
-    )
+    return _compact_state(spark, state_dir, "semantic", n_buckets)
 
 
 def _sem_next_meta_path(state_dir: str) -> str:
@@ -1529,7 +1553,7 @@ def recentroid_state(
         _recover_swap(fs, root)
         if not fs.has_visible_files(root):
             raise ValueError(f"semantic state at {state_dir} has no member rows")
-        digest = hashlib.md5(json.dumps(centroids).encode()).hexdigest()
+        digest = _md5_json(centroids)
         if digest == pinned.get("centroids_digest"):
             raise ValueError("new centroids are identical to the pinned ones")
         n_buckets = int(pinned["n_buckets"])
@@ -1568,9 +1592,8 @@ def recentroid_state(
         fs.delete(stage, True)
         _staged_bucketed_write(reassigned, stage, ["cluster"], n_buckets)
         fs.touch_atomic(_join(stage, f"_centroids-{digest}"))
-        tmp, old = root + "._compact_tmp", root + "._compact_old"
-        if fs.exists(tmp):
-            fs.delete(tmp, True)
+        tmp = root + "._compact_tmp"
+        fs.delete(tmp, True)
         if not fs.rename(stage, tmp):
             raise IOError(f"recentroid: rename {stage} -> {tmp} failed")
         if _crash == "after_stage":
@@ -1578,15 +1601,7 @@ def recentroid_state(
 
         # 3. the compaction swap (crash from here on rolls FORWARD)
         n = spark.read.parquet(tmp).count()
-        if fs.exists(old):
-            fs.delete(old, True)
-        if not fs.rename(root, old):
-            raise IOError(f"recentroid: rename {root} -> {old} failed")
-        if _crash == "mid_swap":
-            raise SimulatedCrash("mid_swap")
-        if not fs.rename(tmp, root):
-            raise IOError(f"recentroid: rename {tmp} -> {root} failed")
-        fs.delete(old, True)
+        _swap_in(fs, root, tmp, _crash)
         if _crash == "before_finalize":
             raise SimulatedCrash("before_finalize")
 
@@ -1604,28 +1619,26 @@ def _ingest_keyed(
     spark: SparkSession,
     batch: DataFrame,
     state_dir: str,
-    keys_of,
-    key_cols: tuple,
-    corpus_rel: str,
-    state_rel: str,
-    id_col: str,
     leg: str,
+    keys_of,
+    id_col: str,
     given: dict,
     defaults: dict,
-    epoch_id,
-    _crash: str | None,
-    meta_extra: dict | None = None,
+    extra: dict | None = None,
     state_mode: str | None = None,
+    epoch_id=None,
+    _crash: str | None = None,
     _locked: bool = False,
-) -> tuple[int, int, int, int] | None:
-    """Shared engine of the LSH-keyed incremental loops: classify a batch
-    against a persistent bucketed key state (historical iff ANY key seen;
-    within-batch iff a smaller-id member shares a key), append accepted
-    rows + the batch's keys atomically. ``keys_of(effective_params)``
+) -> dict[str, int] | None:
+    """Classification of the LSH-keyed legs (near-dup, embdup) inside
+    the shared :func:`_ingest` transaction: a batch row is historical
+    iff ANY of its keys is in the persistent bucketed key state, and
+    within-batch iff a smaller-id batch member shares a key; accepted
+    rows + the keys append atomically. ``keys_of(effective_params)``
     builds the key frame AFTER the leg's parameters resolve against the
     pinned ``_meta`` (so the key function provably matches the stored
-    state). Returns (n_batch, n_hist, n_within, n_accepted), or None on
-    a redelivered committed epoch.
+    state). Returns ``{"n_batch", "n_hist_<leg>", "n_within_<leg>",
+    "n_accepted"}``, or None on a redelivered committed epoch.
 
     ``state_mode`` (r10 verdict #3 — the semantic leg's r10 feature,
     propagated to the keyed legs): ``"all"`` (default) appends EVERY
@@ -1654,87 +1667,39 @@ def _ingest_keyed(
     cardinality (the neardup leg's md5 band keys are effectively
     unbounded, so it narrows only by true duplication — exactly 1/4 the
     rows on the x4-duplicated probe)."""
-    if state_mode is not None and state_mode not in ("all", "keepers"):
-        raise ValueError(f"state_mode must be 'all' or 'keepers', got {state_mode!r}")
-    with nullcontext() if _locked else _writer_lease(spark, state_dir):
-        if not _locked:
-            recover_state(spark, state_dir)
-        if epoch_id is not None and epoch_committed(spark, state_dir, epoch_id):
-            return None
-        fs = HadoopFS(spark, state_dir)
-        eff = _resolve_meta(
-            fs,
-            state_dir,
-            leg,
-            {**given, "state_mode": state_mode},
-            {**defaults, "state_mode": "all"},
-            extra=meta_extra,
-        )
-        keepers_only = eff["state_mode"] == "keepers"
-        n_buckets = int(eff["n_buckets"])
-        keys = keys_of(eff)
-        state_root = _join(state_dir, state_rel)
-        corpus_root = _join(state_dir, corpus_rel)
-        kc = list(key_cols)
+    _check_state_mode(state_mode)
+    key_cols = _STATE_KEYS[leg]
 
-        n_batch = batch.count()
+    def classify(eff: dict, n_batch: int, stage) -> dict[str, int]:
+        keys = keys_of(eff)
         # every consumer (both classification counts, both staged writes)
         # runs inside the scope, so the cache releases with zero recompute
         # (cachectl.py); the key-derivation pass runs once
         with scoped_cache(keys):
             state = _ensure_state_table(
-                spark, state_root, keys.select(id_col, *kc), kc, n_buckets
-            ).select(*kc)
-            hist_ids = keys.join(state, kc, "left_semi").select(id_col).distinct()
+                spark, _join(state_dir, _LEG_ROOTS[leg][1]),
+                keys.select(id_col, *key_cols), key_cols, int(eff["n_buckets"]),
+            ).select(*key_cols)
+            hist_ids = keys.join(state, key_cols, "left_semi").select(id_col).distinct()
             # within-batch: smallest id per batch bucket; a row with ANY
             # bucket whose min is a smaller id is a within-batch near-dup
-            bucket_min = keys.groupBy(*kc).agg(F.min(id_col).alias("__min_id"))
+            bucket_min = keys.groupBy(*key_cols).agg(F.min(id_col).alias("__min_id"))
             within_ids = (
-                keys.join(bucket_min, kc)
+                keys.join(bucket_min, key_cols)
                 .filter(F.col("__min_id") < F.col(id_col))
                 .select(id_col)
                 .distinct()
             )
-            with scoped_cache(hist_ids):
-                n_hist = hist_ids.count()
-                n_within = within_ids.join(hist_ids, id_col, "left_anti").count()
-                accepted = (
-                    batch.join(hist_ids, id_col, "left_anti")
-                    .join(within_ids, id_col, "left_anti")
-                )
-                n_accepted = accepted.count()
-                staged: list[str] = []
-                token = uuid.uuid4().hex
-                if n_accepted:
-                    accepted.write.parquet(_staged_dir(corpus_root, token))
-                    staged.append(corpus_rel)
-                # "all": seen-semantics — append EVERY batch row's keys
-                # (replays then classify 100% historical and append again:
-                # harmless duplicates in an existence-checked state;
-                # compaction collapses them). "keepers": only accepted
-                # rows' keys append (docstring — state follows the
-                # deduped corpus)
-                state_keys = (
-                    keys.join(accepted.select(id_col), id_col, "left_semi")
-                    if keepers_only
-                    else keys
-                )
-                if (n_accepted if keepers_only else n_batch) > 0:
-                    _staged_bucketed_write(
-                        state_keys.select(id_col, *kc),
-                        _staged_dir(state_root, token),
-                        kc,
-                        n_buckets,
-                    )
-                    staged.append(state_rel)
-                # an epoch-tagged empty/all-dup batch still commits its
-                # (possibly empty) marker so redelivery skips wholesale
-                if staged or epoch_id is not None:
-                    _commit(
-                        spark, state_dir, staged, token,
-                        epoch_id=epoch_id, _crash=_crash,
-                    )
-    return n_batch, n_hist, n_within, n_accepted
+            return _exists_funnel(
+                batch, keys.select(id_col, *key_cols), hist_ids, within_ids,
+                eff, n_batch, stage, leg, leg, id_col,
+            )
+
+    return _ingest(
+        spark, batch, state_dir, leg,
+        {**given, "state_mode": state_mode}, {**defaults, "state_mode": "all"},
+        classify, extra=extra, epoch_id=epoch_id, _crash=_crash, _locked=_locked,
+    )
 
 
 def ingest_batch_bloom(
@@ -1786,35 +1751,18 @@ def ingest_batch_bloom(
     sentinel class (module docstring), so the theorem covers them."""
     from ..operators.dedup import bloom_positions
 
-    with nullcontext() if _locked else _writer_lease(spark, state_dir):
-        if not _locked:
-            recover_state(spark, state_dir)
-        if epoch_id is not None and epoch_committed(spark, state_dir, epoch_id):
-            return None
-        fs = HadoopFS(spark, state_dir)
-        eff = _resolve_meta(
-            fs, state_dir, "bloom",
-            {"m_bits": m_bits, "k": k, "n_buckets": n_buckets},
-            {**DEFAULT_BLOOM, "n_buckets": DEFAULT_BUCKETS},
-        )
-        m_bits, k, n_buckets = int(eff["m_bits"]), int(eff["k"]), int(eff["n_buckets"])
-        corpus_root = _join(state_dir, "corpus_bloom")
-        bits_root = _join(state_dir, "bloom_bits")
-
-        n_batch = batch.count()
-        keyed = batch.select(_text_digest(text_col), *batch.columns)
-        keeper = keyed.groupBy("digest").agg(F.min(id_col).alias(id_col))
-        batch_unique = keyed.join(keeper, ["digest", id_col])
-
+    def classify(eff: dict, n_batch: int, stage) -> dict[str, int]:
+        m, kk = int(eff["m_bits"]), int(eff["k"])
+        batch_unique = _batch_unique(batch, text_col, id_col)
         probes = batch_unique.select(
-            id_col, F.explode(bloom_positions(F.col("digest"), m_bits, k)).alias("pos")
+            id_col, F.explode(bloom_positions(F.col("digest"), m, kk)).alias("pos")
         ).distinct()
         state = _ensure_state_table(
             spark,
-            bits_root,
+            _join(state_dir, "bloom_bits"),
             spark.createDataFrame([], "pos long"),
             ["pos"],
-            n_buckets,
+            int(eff["n_buckets"]),
         )
         # bucketed groupBy: generation-duplicate bits collapse shuffle-free
         state_pos = state.groupBy("pos").agg(F.lit(1).alias("__set")).select("pos")
@@ -1833,37 +1781,24 @@ def ingest_batch_bloom(
             n_hist = hist_ids.count()
             accepted = batch_unique.join(hist_ids, id_col, "left_anti")
             n_accepted = n_unique - n_hist
-            token = uuid.uuid4().hex
-            staged: list[str] = []
             if n_accepted:
-                accepted.drop("digest").write.parquet(_staged_dir(corpus_root, token))
-                new_bits = (
-                    accepted.select(
-                        F.explode(
-                            bloom_positions(F.col("digest"), m_bits, k)
-                        ).alias("pos")
-                    ).distinct()
-                )
-                _staged_bucketed_write(
-                    new_bits, _staged_dir(bits_root, token), ["pos"], n_buckets
-                )
-                staged = ["corpus_bloom", "bloom_bits"]
-            if staged or epoch_id is not None:
-                _commit(
-                    spark,
-                    state_dir,
-                    staged,
-                    token,
-                    epoch_id=epoch_id,
-                    _crash=_crash,
-                )
+                stage("corpus_bloom", accepted.drop("digest"))
+                new_bits = accepted.select(
+                    F.explode(bloom_positions(F.col("digest"), m, kk)).alias("pos")
+                ).distinct()
+                stage("bloom_bits", new_bits, ["pos"])
+        return {
+            "n_batch": n_batch,
+            "n_within_dup": n_batch - n_unique,
+            "n_rejected_maybe_dup": n_hist,
+            "n_accepted": n_accepted,
+        }
 
-    return {
-        "n_batch": n_batch,
-        "n_within_dup": n_batch - n_unique,
-        "n_rejected_maybe_dup": n_hist,
-        "n_accepted": n_accepted,
-    }
+    return _ingest(
+        spark, batch, state_dir, "bloom",
+        {"m_bits": m_bits, "k": k, "n_buckets": n_buckets}, DEFAULT_BLOOM, classify,
+        epoch_id=epoch_id, _crash=_crash, _locked=_locked,
+    )
 
 
 def compact_bloom_state(
@@ -1875,7 +1810,7 @@ def compact_bloom_state(
     corpus size. Single writer (lease-enforced); ``n_buckets`` defaults
     from the pinned ``_meta`` — a compaction can no longer rewrite the
     state with a bucket count the table spec disagrees with."""
-    return _compact_state(spark, state_dir, "bloom_bits", ["pos"], "bloom", n_buckets)
+    return _compact_state(spark, state_dir, "bloom", n_buckets)
 
 
 # ---------------------------------------------------------------------------
@@ -1890,34 +1825,43 @@ def _recover_swap(fs: HadoopFS, root: str) -> str:
     roll forward; root missing + old → roll back."""
     tmp, old = root + "._compact_tmp", root + "._compact_old"
     if fs.exists(root):
-        for left in (tmp, old):
-            if fs.exists(left):
-                fs.delete(left, True)
+        fs.delete(tmp, True)
+        fs.delete(old, True)
         return "ok"
     if fs.exists(_join(tmp, "_SUCCESS")):
         if not fs.rename(tmp, root):
             raise IOError(f"recover_swap: rename {tmp} -> {root} failed")
-        if fs.exists(old):
-            fs.delete(old, True)
+        fs.delete(old, True)
         return "rolled_forward"
     if fs.exists(old):
         if not fs.rename(old, root):
             raise IOError(f"recover_swap: rename {old} -> {root} failed")
-        if fs.exists(tmp):
-            fs.delete(tmp, True)
+        fs.delete(tmp, True)
         return "rolled_back"
     return "absent"
 
 
+def _swap_in(fs: HadoopFS, root: str, tmp: str, _crash: str | None = None) -> None:
+    """Swap a complete ``tmp`` directory in for ``root`` — the forward
+    half of :func:`_recover_swap`'s state machine: root → ``._compact_old``
+    (skipped when ``root`` does not exist yet), tmp → root, drop old. A
+    crash between the two renames (``mid_swap``) rolls forward on the
+    next recovery, because tmp is complete."""
+    old = root + "._compact_old"
+    fs.delete(old, True)
+    if fs.exists(root) and not fs.rename(root, old):
+        raise IOError(f"swap: rename {root} -> {old} failed")
+    if _crash == "mid_swap":
+        raise SimulatedCrash("mid_swap")
+    if not fs.rename(tmp, root):
+        raise IOError(f"swap: rename {tmp} -> {root} failed")
+    fs.delete(old, True)
+
+
 def _compact_state(
-    spark: SparkSession,
-    state_dir: str,
-    rel: str,
-    bucket_cols: list[str],
-    leg: str,
-    n_buckets: int | None,
+    spark: SparkSession, state_dir: str, leg: str, n_buckets: int | None
 ) -> int:
-    """Rewrite one bucketed state root with duplicates collapsed, then
+    """Rewrite ``leg``'s bucketed state root with duplicates collapsed, then
     swap the new directory in. The swap's only non-atomic window (root
     renamed away, tmp not yet renamed in) is settled by
     :func:`recover_state` / :func:`_recover_swap` on the next touch —
@@ -1931,7 +1875,7 @@ def _compact_state(
     value raises :class:`StateParamMismatch`."""
     with _writer_lease(spark, state_dir):
         fs = HadoopFS(spark, state_dir)
-        if rel == "semantic_members":
+        if leg == "semantic":
             # a crashed recentroid migration must settle BEFORE a
             # compaction rewrite destroys its tag file (else recovery
             # could roll the meta back against new-clustered members)
@@ -1948,33 +1892,21 @@ def _compact_state(
                 f"bucket files from the table spec — omit n_buckets to use "
                 f"the pinned value"
             )
-        root = _join(state_dir, rel)
+        root = _join(state_dir, _LEG_ROOTS[leg][1])
         _recover_swap(fs, root)
         if not fs.has_visible_files(root):
             return 0
-        if pinned is None and n_buckets is None:
-            # same pre-upgrade refusal as _resolve_meta: rewriting an
-            # unpinned state with the default count could desync the
-            # bucket files from how the data was originally written
-            raise StateParamMismatch(
-                f"{leg} state at {state_dir} holds data but has no pinned "
-                f"_meta; pass n_buckets explicitly (matching the original "
-                f"build) to compact it"
-            )
-        n_buckets = int(pinned) if pinned is not None else int(n_buckets)
-        tmp, old = root + "._compact_tmp", root + "._compact_old"
+        # pinned, else explicit; an unpinned state holding data with no
+        # explicit count raises (the pre-upgrade refusal of _resolve_meta:
+        # the default could desync the bucket files from the original build)
+        n_buckets = _meta_buckets(spark, state_dir, leg, n_buckets)
+        tmp = root + "._compact_tmp"
         compacted = spark.read.parquet(root).distinct()
         # the rewrite goes through the bucketed writer so the swapped-in
         # files keep the bucket layout the state table's scans rely on
-        _staged_bucketed_write(compacted, tmp, bucket_cols, n_buckets)
+        _staged_bucketed_write(compacted, tmp, _STATE_KEYS[leg], n_buckets)
         n = spark.read.parquet(tmp).count()
-        if fs.exists(old):
-            fs.delete(old, True)
-        if not fs.rename(root, old):
-            raise IOError(f"compact: rename {root} -> {old} failed")
-        if not fs.rename(tmp, root):
-            raise IOError(f"compact: rename {tmp} -> {root} failed")
-        fs.delete(old, True)
+        _swap_in(fs, root, tmp)
         _refresh_state_table(spark, root)
         return n
 
@@ -1991,9 +1923,7 @@ def compact_neardup_state(
     :func:`recover_state`. Single writer (lease-enforced); ``n_buckets``
     defaults from the pinned ``_meta``. Returns the compacted row
     count."""
-    return _compact_state(
-        spark, state_dir, "neardup_bands", ["band", "bk"], "neardup", n_buckets
-    )
+    return _compact_state(spark, state_dir, "neardup", n_buckets)
 
 
 def compact_embdup_state(
@@ -2002,9 +1932,7 @@ def compact_embdup_state(
     """Embedding-loop twin of :func:`compact_neardup_state`: collapse
     replay-duplicated (id, tbl, bucket) rows, rewrite bucketed, swap in.
     Single writer (lease-enforced); ``n_buckets`` defaults from ``_meta``."""
-    return _compact_state(
-        spark, state_dir, "embdup_buckets", ["tbl", "bucket"], "embdup", n_buckets
-    )
+    return _compact_state(spark, state_dir, "embdup", n_buckets)
 
 
 def compact_fingerprints(
@@ -2015,9 +1943,7 @@ def compact_fingerprints(
     never appends duplicates itself, but a restored/merged state can
     carry them) and rewrite it bucketed. Single writer (lease-enforced);
     ``n_buckets`` defaults from ``_meta``."""
-    return _compact_state(
-        spark, state_dir, "fingerprints", ["digest"], "exact", n_buckets
-    )
+    return _compact_state(spark, state_dir, "exact", n_buckets)
 
 
 DEFAULT_SKETCH_K = 128
@@ -2084,29 +2010,17 @@ def ingest_batch_sketch(
     mergeability property, replayed by DuckDB)."""
     from ..operators.sketches import kmv_group_sketches, shingle_hv
 
-    with nullcontext() if _locked else _writer_lease(spark, state_dir):
-        if not _locked:
-            recover_state(spark, state_dir)
-        if epoch_id is not None and epoch_committed(spark, state_dir, epoch_id):
-            return None
+    def merge_sketch(eff: dict, n_batch: int, stage) -> dict[str, int]:
+        n_buckets = int(eff["n_buckets"])
         fs = HadoopFS(spark, state_dir)
-        eff = _resolve_meta(
-            fs, state_dir, "sketch",
-            {"k": k, "n_buckets": n_buckets},
-            {"k": DEFAULT_SKETCH_K, "n_buckets": DEFAULT_BUCKETS},
-        )
-        k_eff, n_buckets = int(eff["k"]), int(eff["n_buckets"])
         root = _join(state_dir, "kmv_sketch")
-
-        n_batch = batch.count()
         el = shingle_hv(batch, [group_col], text_col=text_col)
         old = kmv_sketch_state(spark, state_dir, group_col, n_buckets).select(
             group_col, "hv"
         )
-        merged = kmv_group_sketches(old.unionByName(el), group_col, k=k_eff)
-        tmp, old_dir = root + "._compact_tmp", root + "._compact_old"
-        if fs.exists(tmp):
-            fs.delete(tmp, True)
+        merged = kmv_group_sketches(old.unionByName(el), group_col, k=int(eff["k"]))
+        tmp = root + "._compact_tmp"
+        fs.delete(tmp, True)
         _staged_bucketed_write(merged, tmp, [group_col], n_buckets)
         if _crash == "after_stage":
             raise SimulatedCrash("after_stage")
@@ -2118,23 +2032,20 @@ def ingest_batch_sketch(
             )
             .collect()[0]
         )
-        n_rows, n_groups = int(row["n"]), int(row["g"])
-        if fs.exists(old_dir):
-            fs.delete(old_dir, True)
-        if fs.exists(root):
-            if not fs.rename(root, old_dir):
-                raise IOError(f"sketch swap: rename {root} -> {old_dir} failed")
-        if _crash == "mid_swap":
-            raise SimulatedCrash("mid_swap")
-        if not fs.rename(tmp, root):
-            raise IOError(f"sketch swap: rename {tmp} -> {root} failed")
-        fs.delete(old_dir, True)
+        _swap_in(fs, root, tmp, _crash)
         if _crash == "before_epoch":
             raise SimulatedCrash("before_epoch")
         if epoch_id is not None:
             _record_epoch(fs, state_dir, epoch_id)
         _refresh_state_table(spark, root)
-    return {"n_batch": n_batch, "n_groups": n_groups, "n_sketch_rows": n_rows}
+        return {"n_batch": n_batch, "n_groups": int(row["g"]), "n_sketch_rows": int(row["n"])}
+
+    # the swap is the commit: no journal marker (docstring)
+    return _ingest(
+        spark, batch, state_dir, "sketch", {"k": k, "n_buckets": n_buckets},
+        {"k": DEFAULT_SKETCH_K}, merge_sketch,
+        epoch_id=epoch_id, _locked=_locked, journal=False,
+    )
 
 
 def sketch_report(

@@ -57,7 +57,7 @@ def get_spark(app_name: str = "retail-sales-spark-engine") -> SparkSession:
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         # iterative operators finalize to RELIABLE checkpoints
-        # (cachectl.finalize_iterative); with reference tracking the
+        # (cachectl.shared_frame); with reference tracking the
         # ContextCleaner deletes checkpoint files once the frame is
         # garbage collected, so a long-lived session reclaims disk too
         # (builder-time only — the cleaner reads it at startup)

@@ -41,6 +41,13 @@ Scale shape is inherited: per-micro-batch cost proportional to the
 batch (one bucketed equi-join against the state, state side never
 shuffles), history never rescanned; one recovery sweep per micro-batch
 (the ingest function's own — the ingestor adds none).
+
+Shape: every ``make_*_ingestor`` is :func:`_make_ingestor` bound to one
+batch ingest function (``ingest_batch*``, each running the shared ingest
+transaction of plans/incremental_corpus.py), and every
+``stream_ingest_*`` is :func:`_start` bound to one ingestor factory —
+the sink adds only the epoch namespace and the ``availableNow``
+foreachBatch query.
 """
 
 from __future__ import annotations
@@ -81,13 +88,16 @@ def _checkpoint_namespace(spark, checkpoint_location: str) -> str:
     return "p" + hashlib.md5(checkpoint_location.encode("utf-8")).hexdigest()[:16]
 
 
-def _make_ingestor(ingest_fn, state_dir: str, on_stats, checkpoint_location, epoch_ns):
+def _make_ingestor(
+    ingest_fn, state_dir: str, on_stats, checkpoint_location, epoch_ns, **ingest_kwargs
+):
     """Shared foreachBatch wrapper: resolve the epoch namespace lazily
     (the checkpoint metadata exists once the query started), tag the
-    micro-batch's epoch, and delegate to the batch ingest function —
-    which recovers, guards the epoch, classifies, and commits under its
-    own writer lease. ``on_stats(batch_id, funnel_dict)`` fires only for
-    epochs that actually ran (None = skipped redelivery)."""
+    micro-batch's epoch, and delegate to the batch ingest function
+    (called with ``ingest_kwargs``) — which recovers, guards the epoch,
+    classifies, and commits under its own writer lease.
+    ``on_stats(batch_id, funnel_dict)`` fires only for epochs that
+    actually ran (None = skipped redelivery)."""
     resolved = {"ns": epoch_ns}
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
@@ -96,11 +106,37 @@ def _make_ingestor(ingest_fn, state_dir: str, on_stats, checkpoint_location, epo
             resolved["ns"] = _checkpoint_namespace(spark, checkpoint_location)
         ns = resolved["ns"]
         epoch = f"{ns}-{int(batch_id)}" if ns else int(batch_id)
-        stats = ingest_fn(spark, batch_df, state_dir, epoch_id=epoch)
+        stats = ingest_fn(spark, batch_df, state_dir, epoch_id=epoch, **ingest_kwargs)
         if stats is not None and on_stats is not None:
             on_stats(batch_id, stats)
 
     return ingest
+
+
+def _start(
+    stream_df: DataFrame, make_ingestor, query_name: str, checkpoint_location: str,
+    *args, **ingest_kwargs,
+) -> StreamingQuery:
+    """Start ``stream_df`` into ``make_ingestor(*args, ...)`` as its
+    foreachBatch sink, exactly once per epoch. ``availableNow`` drains
+    the source and stops — the daily-batch trigger shape; a production
+    stream uses a processing-time trigger with the same sink.
+    ``checkpoint_location`` is REQUIRED: it makes batch ids durable
+    across restarts AND namespaces the epoch guard (module docstring) —
+    without it every run would restart at batch 0 and silently skip
+    novel documents."""
+    return (
+        stream_df.writeStream.foreachBatch(
+            make_ingestor(
+                *args, checkpoint_location=checkpoint_location, **ingest_kwargs
+            )
+        )
+        .option("checkpointLocation", checkpoint_location)
+        .queryName(query_name)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def make_exact_ingestor(
@@ -114,11 +150,9 @@ def make_exact_ingestor(
     Pass ``checkpoint_location`` (or an explicit ``epoch_ns``) whenever
     the callback serves a real streaming query — raw batch ids are only
     unique per checkpoint (module docstring)."""
-
-    def fn(spark, batch_df, state_dir, epoch_id):
-        return ingest_batch(spark, batch_df, state_dir, epoch_id=epoch_id, **ingest_kwargs)
-
-    return _make_ingestor(fn, state_dir, on_stats, checkpoint_location, epoch_ns)
+    return _make_ingestor(
+        ingest_batch, state_dir, on_stats, checkpoint_location, epoch_ns, **ingest_kwargs
+    )
 
 
 def make_sketch_ingestor(
@@ -133,13 +167,10 @@ def make_sketch_ingestor(
     epoch guard is belt-and-braces here — a redelivered batch would
     re-merge idempotently even without it (k-min merge algebra) — but
     keeping it makes delivery auditable like every other leg."""
-
-    def fn(spark, batch_df, state_dir, epoch_id):
-        return ingest_batch_sketch(
-            spark, batch_df, state_dir, epoch_id=epoch_id, **ingest_kwargs
-        )
-
-    return _make_ingestor(fn, state_dir, on_stats, checkpoint_location, epoch_ns)
+    return _make_ingestor(
+        ingest_batch_sketch, state_dir, on_stats, checkpoint_location, epoch_ns,
+        **ingest_kwargs,
+    )
 
 
 def make_neardup_ingestor(
@@ -151,13 +182,10 @@ def make_neardup_ingestor(
 ):
     """foreachBatch callback: MinHash-LSH near-dup ingest of each
     micro-batch against the persistent band-key state."""
-
-    def fn(spark, batch_df, state_dir, epoch_id):
-        return ingest_batch_neardup(
-            spark, batch_df, state_dir, epoch_id=epoch_id, **ingest_kwargs
-        )
-
-    return _make_ingestor(fn, state_dir, on_stats, checkpoint_location, epoch_ns)
+    return _make_ingestor(
+        ingest_batch_neardup, state_dir, on_stats, checkpoint_location, epoch_ns,
+        **ingest_kwargs,
+    )
 
 
 def make_bloom_ingestor(
@@ -170,13 +198,10 @@ def make_bloom_ingestor(
     """foreachBatch callback: Bloom-filter exact-dedup ingest (space-
     optimized state, no false negatives, tunable FP rate) of each
     micro-batch."""
-
-    def fn(spark, batch_df, state_dir, epoch_id):
-        return ingest_batch_bloom(
-            spark, batch_df, state_dir, epoch_id=epoch_id, **ingest_kwargs
-        )
-
-    return _make_ingestor(fn, state_dir, on_stats, checkpoint_location, epoch_ns)
+    return _make_ingestor(
+        ingest_batch_bloom, state_dir, on_stats, checkpoint_location, epoch_ns,
+        **ingest_kwargs,
+    )
 
 
 def make_embdup_ingestor(
@@ -191,13 +216,10 @@ def make_embdup_ingestor(
     each micro-batch against the persistent (tbl, bucket) state.
     ``tables`` may be omitted once the state's first ingest pinned them
     into ``_meta``."""
-
-    def fn(spark, batch_df, state_dir, epoch_id):
-        return ingest_batch_embdup(
-            spark, batch_df, state_dir, tables, epoch_id=epoch_id, **ingest_kwargs
-        )
-
-    return _make_ingestor(fn, state_dir, on_stats, checkpoint_location, epoch_ns)
+    return _make_ingestor(
+        ingest_batch_embdup, state_dir, on_stats, checkpoint_location, epoch_ns,
+        tables=tables, **ingest_kwargs,
+    )
 
 
 def make_semantic_ingestor(
@@ -212,13 +234,10 @@ def make_semantic_ingestor(
     (exact rounded-cosine verify within one centroid cell) of each
     micro-batch. ``centroids`` may be omitted once the state's first
     ingest pinned them into ``_meta``."""
-
-    def fn(spark, batch_df, state_dir, epoch_id):
-        return ingest_batch_semantic(
-            spark, batch_df, state_dir, centroids, epoch_id=epoch_id, **ingest_kwargs
-        )
-
-    return _make_ingestor(fn, state_dir, on_stats, checkpoint_location, epoch_ns)
+    return _make_ingestor(
+        ingest_batch_semantic, state_dir, on_stats, checkpoint_location, epoch_ns,
+        centroids=centroids, **ingest_kwargs,
+    )
 
 
 def stream_ingest_semantic(
@@ -230,18 +249,9 @@ def stream_ingest_semantic(
     **ingest_kwargs,
 ) -> StreamingQuery:
     """Semantic-verify twin of :func:`stream_ingest_embdup`."""
-    return (
-        stream_df.writeStream.foreachBatch(
-            make_semantic_ingestor(
-                state_dir, centroids,
-                checkpoint_location=checkpoint_location, **ingest_kwargs,
-            )
-        )
-        .option("checkpointLocation", checkpoint_location)
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return _start(
+        stream_df, make_semantic_ingestor, query_name, checkpoint_location,
+        state_dir, centroids, **ingest_kwargs,
     )
 
 
@@ -254,18 +264,9 @@ def stream_ingest_embdup(
     **ingest_kwargs,
 ) -> StreamingQuery:
     """Embedding-LSH twin of :func:`stream_ingest_neardup`."""
-    return (
-        stream_df.writeStream.foreachBatch(
-            make_embdup_ingestor(
-                state_dir, tables,
-                checkpoint_location=checkpoint_location, **ingest_kwargs,
-            )
-        )
-        .option("checkpointLocation", checkpoint_location)
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return _start(
+        stream_df, make_embdup_ingestor, query_name, checkpoint_location,
+        state_dir, tables, **ingest_kwargs,
     )
 
 
@@ -277,24 +278,10 @@ def stream_ingest_neardup(
     **ingest_kwargs,
 ) -> StreamingQuery:
     """Start a streaming query running the near-dup ingest loop on every
-    micro-batch, exactly once per epoch. ``availableNow`` drains the
-    source and stops — the daily-batch trigger shape; a production
-    stream uses a processing-time trigger with the same sink.
-    ``checkpoint_location`` is REQUIRED: it makes batch ids durable
-    across restarts AND namespaces the epoch guard (module docstring) —
-    without it every run would restart at batch 0 and silently skip
-    novel documents."""
-    return (
-        stream_df.writeStream.foreachBatch(
-            make_neardup_ingestor(
-                state_dir, checkpoint_location=checkpoint_location, **ingest_kwargs
-            )
-        )
-        .option("checkpointLocation", checkpoint_location)
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    micro-batch, exactly once per epoch (:func:`_start`)."""
+    return _start(
+        stream_df, make_neardup_ingestor, query_name, checkpoint_location,
+        state_dir, **ingest_kwargs,
     )
 
 
@@ -306,38 +293,7 @@ def stream_ingest_exact(
     **ingest_kwargs,
 ) -> StreamingQuery:
     """Exact-dedup twin of :func:`stream_ingest_neardup`."""
-    return (
-        stream_df.writeStream.foreachBatch(
-            make_exact_ingestor(
-                state_dir, checkpoint_location=checkpoint_location, **ingest_kwargs
-            )
-        )
-        .option("checkpointLocation", checkpoint_location)
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def stream_ingest_bloom(
-    stream_df: DataFrame,
-    state_dir: str,
-    query_name: str,
-    checkpoint_location: str,
-    **ingest_kwargs,
-) -> StreamingQuery:
-    """Bloom-filter twin of :func:`stream_ingest_exact` (space-optimized
-    state; m_bits/k pin into the state's _meta on first ingest)."""
-    return (
-        stream_df.writeStream.foreachBatch(
-            make_bloom_ingestor(
-                state_dir, checkpoint_location=checkpoint_location, **ingest_kwargs
-            )
-        )
-        .option("checkpointLocation", checkpoint_location)
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return _start(
+        stream_df, make_exact_ingestor, query_name, checkpoint_location,
+        state_dir, **ingest_kwargs,
     )

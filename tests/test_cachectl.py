@@ -15,7 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_pipeline_for_retail_sales_data_spark.cachectl import (
-    finalize_iterative,
+    shared_frame as finalize_iterative,
     local_ckpt,
     release_ckpt,
     scoped_cache,

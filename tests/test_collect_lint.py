@@ -42,7 +42,7 @@ BOUNDED_COLLECTS = {
     ("plans/corpus.py", "release_corpus"): "scalar funnel counters (1 row)",
     ("plans/incremental_corpus.py", "_ensure_state_table"): "DESCRIBE FORMATTED output (O(columns + properties))",
     ("plans/incremental_corpus.py", "state_report"): "per-cell occupancy totals (1 row) + top-8 cells (limit 8)",
-    ("plans/incremental_corpus.py", "ingest_batch_sketch"): "scalar stats aggregate over the staged sketch (1 row)",
+    ("plans/incremental_corpus.py", "merge_sketch"): "scalar stats aggregate over the staged sketch (1 row)",
     ("queries_registry.py", "q_qdigest_quantiles"): "O(quantile cutpoints) sketch summary",
     ("queries_registry.py", "q_streaming_left_outer_join"): "scalar max timestamp (1 row)",
     ("queries_registry.py", "q_pagerank_neardup"): "scalar mass/teleport invariants (1 row)",

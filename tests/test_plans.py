@@ -189,7 +189,7 @@ def test_token_diversity_two_phase_agg(spark, sf_smoke):
 def test_drift_family_single_fact_scan(spark, sf_smoke):
     """psi_drift / chisq_drift must aggregate the fact table ONCE: the
     tiny period×category counts frame goes to a reliable checkpoint
-    (cachectl.finalize_iterative) and all three consumers (totals,
+    (cachectl.shared_frame) and all three consumers (totals,
     current, previous) re-read the files — the returned plan contains NO
     live parquet scan of the fact table and NOTHING cached (a persist
     here would leak for the session; the checkpoint lives on disk)."""
